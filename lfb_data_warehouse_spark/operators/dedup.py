@@ -46,6 +46,9 @@ from ..functions.text import HEX_HIGH, shingles, tokens
 # with no frequency pass at all (one count job is the whole cost —
 # that keeps the local bench on the exact r14 plan).
 PAIR_HOT_CAP = int(os.environ.get("LFB_SHINGLE_HOT_CAP", "8192"))
+# most hot keys _hot_keys collects to the driver (and broadcasts); more
+# fail loudly instead of flooding the driver
+_HOT_KEYS_MAX = 100_000
 # target pair rows per salted task chunk; S = ceil(max_d^2 / target)
 _PAIR_SALT_TARGET = 1_000_000
 _PAIR_SALT_MAX = 256
@@ -66,8 +69,10 @@ def _more_rows_than(df: DataFrame, cap: int) -> bool:
 
 
 def _hot_keys(sets: DataFrame, join_cols: list[str], hot_cap: int):
-    """Collect the (provably tiny) hot-key set of an exploded shingle
-    frame: keys with frequency > hot_cap number at most rows/hot_cap.
+    """Collect the hot-key set of an exploded shingle frame: keys with
+    frequency > hot_cap number at most rows/hot_cap. The collect is
+    bounded: at most _HOT_KEYS_MAX + 1 rows come back, and more than
+    _HOT_KEYS_MAX hot keys raise RuntimeError.
     Returns (hot_frame_or_None, salt_count, hot_join_partitions).
 
     The partition count matters as much as the salt: both the AQE skew
@@ -80,7 +85,14 @@ def _hot_keys(sets: DataFrame, join_cols: list[str], hot_cap: int):
     freq = sets.groupBy(*[F.col(c) for c in join_cols]).agg(
         F.count(F.lit(1)).alias("__df")
     )
-    hot_rows = freq.filter(F.col("__df") > hot_cap).collect()
+    hot_rows = freq.filter(F.col("__df") > hot_cap).limit(_HOT_KEYS_MAX + 1).collect()
+    if len(hot_rows) > _HOT_KEYS_MAX:
+        raise RuntimeError(
+            f"more than {_HOT_KEYS_MAX} join keys occur in over {hot_cap} rows "
+            "each; the hot-key set is collected to the driver and broadcast, "
+            "so it is refused rather than collected without bound; raise the "
+            "hot cap"
+        )
     if not hot_rows:
         return None, 0, 0
     spark = sets.sparkSession

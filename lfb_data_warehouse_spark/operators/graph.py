@@ -18,12 +18,25 @@ At 100 TB scale: this is the standard "hash-to-min" formulation
 (Rastogi et al., "Finding Connected Components in Map-Reduce in
 Logarithmic Rounds") restricted to min-propagation; checkpoint labels
 every few rounds to truncate lineage (``checkpoint_every``).
+
+Size gate: every shuffle round costs a few sequential Spark jobs
+whatever the graph's size, and near-dup graphs are often tiny (the
+registry's dedup rows label 1 edge at sf0.01 and 7 at sf0.1). So
+:func:`connected_components_star` picks its execution path from the
+edge count it takes anyway: at most ``_DRIVER_EDGES`` distinct edges
+are collected once and labeled by a union-find on the driver; larger
+graphs run the star rounds, so the driver never holds more than the
+cap (about 360 MB of Python objects for 10^6 edges).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# connected_components_star labels graphs of at most this many distinct
+# edges on the driver (_driver_components) instead of in star rounds
+_DRIVER_EDGES = 1 << 20
 
 
 def connected_components(
@@ -122,8 +135,9 @@ def incremental_components(
     The old ``(node, component)`` labeling IS an edge set (each node —
     its component representative), so the union of labels-as-edges and
     the new edges fed to :func:`connected_components_star` yields the
-    labeling of the merged graph in O(log n) rounds over |new edges| +
-    |old nodes| rows — never the original pair graph. Representatives
+    labeling of the merged graph over |new edges| + |old nodes| rows
+    (on the driver below its size cap, in O(log n) rounds above it) —
+    never the original pair graph. Representatives
     stay stable unless a new edge actually bridges clusters (min id
     wins, as in the full recompute — equality with the from-scratch
     labeling is the unit-test contract)."""
@@ -171,6 +185,34 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _driver_components(e: DataFrame) -> DataFrame:
+    """Label a small distinct ``(u, v)`` edge set on the driver: ONE
+    collect, union-find linking the larger root under the smaller (so
+    every root IS its component's min id) with path compression, and
+    the labels handed back through ``createDataFrame`` in the schema
+    the star rounds return (so the id type is preserved)."""
+    edges = e.collect()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while (up := parent.setdefault(root, root)) != root:
+            root = up
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    del edges  # free the collected rows before the label list is built
+    schema = e.select(F.col("u").alias("node"), F.col("v").alias("component")).schema
+    out = e.sparkSession.createDataFrame([(n, find(n)) for n in parent], schema)
+    e.unpersist()
+    return out
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -190,7 +232,13 @@ def connected_components_star(
     edge-less singletons absent. Fixpoint = the edge set is a star per
     component (every node points at its component min), detected by
     exact set comparison (count + one-sided subtract, two scalar jobs
-    per round — never the data)."""
+    per round — never the data).
+
+    Size gate: a graph of at most ``_DRIVER_EDGES`` distinct edges
+    skips the rounds and is labeled by :func:`_driver_components`
+    (the edge count plus one collect, instead of 2-3 jobs per round).
+    The cap bounds what the driver holds; above it the star rounds
+    run and nothing is collected."""
     e = (
         edges.selectExpr(f"{src} AS u", f"{dst} AS v")
         .filter(F.col("u") != F.col("v"))
@@ -203,6 +251,8 @@ def connected_components_star(
     n_edges = e.count()  # one job: doubles as the empty check
     if n_edges == 0:
         return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+    if n_edges <= _DRIVER_EDGES:
+        return _driver_components(e)
     for i in range(max_iter):
         e2 = _small_star(_large_star(e))
         if checkpoint_every and (i + 1) % checkpoint_every == 0:

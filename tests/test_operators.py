@@ -374,13 +374,17 @@ def test_connected_components_chain_and_islands(spark):
     assert out[30] == 30 and out[31] == 30
 
 
-def test_connected_components_star_logarithmic_on_chain(spark):
+def test_connected_components_star_logarithmic_on_chain(spark, monkeypatch):
+    from lfb_data_warehouse_spark.operators import graph
     from lfb_data_warehouse_spark.operators.graph import connected_components_star
 
     # a 10k-node CHAIN is the adversarial case for min-label propagation
     # (diameter 9 999 → ~10k shuffle rounds); large-star/small-star must
     # converge in O(log n) rounds — max_iter=20 > 2*log2(10 000) + slack,
-    # so mere termination without RuntimeError IS the bound assertion
+    # so mere termination without RuntimeError IS the bound assertion.
+    # The chain is far below the driver cap, so the cap is forced to 0
+    # to run the star rounds this test bounds.
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
     n = 10_000
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
@@ -393,11 +397,14 @@ def test_connected_components_star_logarithmic_on_chain(spark):
     assert set(out.values()) == {0}
 
 
-def test_connected_components_star_matches_label_propagation(spark):
+def test_connected_components_star_matches_label_propagation(spark, monkeypatch):
+    from lfb_data_warehouse_spark.operators import graph
     from lfb_data_warehouse_spark.operators.graph import (
         connected_components,
         connected_components_star,
     )
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)  # star rounds, not the driver path
 
     # chain + triangle + pair + a star fixture (hub with offset leaves)
     chain = [(i, i + 1) for i in range(1, 12)]
@@ -415,11 +422,14 @@ def test_connected_components_star_matches_label_propagation(spark):
     assert all(got[100 + i] == 100 for i in range(8))
 
 
-def test_incremental_components_equals_full_recompute(spark):
+def test_incremental_components_equals_full_recompute(spark, monkeypatch):
+    from lfb_data_warehouse_spark.operators import graph
     from lfb_data_warehouse_spark.operators.graph import (
         connected_components_star,
         incremental_components,
     )
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)  # star rounds, not the driver path
 
     # day 1: two clusters + a pair; day 2: a bridge edge merges the two
     # clusters, plus a brand-new cluster
@@ -439,6 +449,47 @@ def test_incremental_components_equals_full_recompute(spark):
     assert inc == full
     assert all(inc[n] == 1 for n in (1, 2, 3, 10, 11, 12))  # bridged → min id 1
     assert inc[20] == 20 and inc[30] == 30  # untouched / new clusters
+
+
+def _jobs_in_call(spark, fn):
+    """(fn(), number of Spark jobs fn itself launched), counted through
+    its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_jobs_per_call_budget(spark):
+    """Pin the jobs one labeling call launches before its result is
+    used: a small graph takes the driver path (the edge count and one
+    collect), where the star rounds ran 2-3 jobs per round. The same
+    budget holds for incremental_components, which feeds the star
+    operator the old labels as edges."""
+    from lfb_data_warehouse_spark.operators.graph import (
+        connected_components_star,
+        incremental_components,
+    )
+
+    e1 = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21)], "src long, dst long"
+    )
+    e2 = spark.createDataFrame([(3, 10), (30, 31)], "src long, dst long")
+    labels, n_full = _jobs_in_call(spark, lambda: connected_components_star(e1))
+    merged, n_inc = _jobs_in_call(spark, lambda: incremental_components(labels, e2))
+    assert n_full <= 8, n_full
+    assert n_inc <= 8, n_inc
+    got = {r["node"]: r["component"] for r in merged.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 1, 11: 1, 12: 1, 20: 20, 21: 20,
+                   30: 30, 31: 30}
 
 
 def test_approx_ntile_matches_exact_window(spark):
@@ -931,6 +982,34 @@ def test_incremental_hot_key_salting_equals_plain_join(spark):
     assert p == s and len(p) > 0
     # old×old pairs must not appear (both sides pre-date the batch)
     assert all(b >= 140 for _a, b in s)
+
+
+def test_hot_key_collect_is_bounded(spark, monkeypatch):
+    """_hot_keys collects the hot-key set through a limit: at the bound
+    the salted join still equals the plain one, one key past it the
+    kernel raises instead of collecting without bound. PAIR_HOT_CAP is
+    lowered so the default-cap path engages on a 40-doc corpus whose
+    three shared shingles are each in all 40 docs."""
+    import pytest
+
+    from lfb_data_warehouse_spark.operators import dedup
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("alpha beta gamma delta t"), F.col("id").cast("string")).alias("body"),
+    )
+    plain = dedup.all_pairs_jaccard(docs, "doc_id", "body", 2, 0.05, hot_cap=0)
+    want = {(r["id_a"], r["id_b"]): r["jaccard"] for r in plain.collect()}
+
+    monkeypatch.setattr(dedup, "PAIR_HOT_CAP", 2)
+    monkeypatch.setattr(dedup, "_HOT_KEYS_MAX", 3)
+    salted = dedup.all_pairs_jaccard(docs, "doc_id", "body", 2, 0.05)
+    assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in salted.collect()} == want
+    assert len(want) == 40 * 39 // 2
+
+    monkeypatch.setattr(dedup, "_HOT_KEYS_MAX", 2)
+    with pytest.raises(RuntimeError, match="more than 2 join keys"):
+        dedup.all_pairs_jaccard(docs, "doc_id", "body", 2, 0.05)
 
 
 def test_semdedup_mega_cluster_guard_routes_and_matches(spark):

@@ -139,21 +139,7 @@ def test_connected_components_matches_union_find(spark, edges):
         return
     edf = spark.createDataFrame(edges, "src int, dst int")
     got = {r["node"]: r["component"] for r in connected_components(edf).collect()}
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    assert got == union_find_labels(edges)
 
 
 @settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -162,9 +148,29 @@ def test_connected_components_matches_union_find(spark, edges):
         st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=20
     )
 )
-def test_connected_components_star_matches_union_find(spark, edges):
+def test_connected_components_star_matches_union_find(spark, monkeypatch, edges):
     # each example runs several star rounds (multiple Spark jobs), so
-    # examples are fewer than the label-propagation property's
+    # examples are fewer than the label-propagation property's; the
+    # driver cap is forced to 0 so these graphs take the star rounds
+    from lfb_data_warehouse_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
+    check_star_against_union_find(spark, edges)
+
+
+@SETTINGS
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=20
+    )
+)
+def test_connected_components_star_driver_path_matches_union_find(spark, edges):
+    """The same property at the default driver cap: graphs this small
+    are labeled by the driver-side union-find."""
+    check_star_against_union_find(spark, edges)
+
+
+def check_star_against_union_find(spark, edges):
     from lfb_data_warehouse_spark.operators.graph import connected_components_star
 
     edges = [(a, b) for a, b in edges if a != b]
@@ -174,7 +180,42 @@ def test_connected_components_star_matches_union_find(spark, edges):
     got = {
         r["node"]: r["component"] for r in connected_components_star(edf).collect()
     }
+    assert got == union_find_labels(edges)
 
+
+def test_connected_components_star_falls_back_above_driver_cap(spark, monkeypatch):
+    """Above the driver cap the edges are never collected: the star
+    rounds label the graph, and the labels still equal the reference.
+    At or below the cap the driver path runs, with the star path's
+    output schema."""
+    from lfb_data_warehouse_spark.operators import graph
+
+    calls = []
+    driver = graph._driver_components
+
+    def spy(e):
+        calls.append(e)
+        return driver(e)
+
+    monkeypatch.setattr(graph, "_driver_components", spy)
+    edges = [(i, i + 1) for i in range(10)] + [(20, 21), (21, 22), (40, 41)]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    want = union_find_labels(edges)
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", len(edges) - 1)
+    star = graph.connected_components_star(edf)
+    assert calls == []
+    assert {r["node"]: r["component"] for r in star.collect()} == want
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", len(edges))
+    driven = graph.connected_components_star(edf)
+    assert len(calls) == 1
+    assert {r["node"]: r["component"] for r in driven.collect()} == want
+    assert driven.schema == star.schema
+
+
+def union_find_labels(edges):
+    """Reference labeling: node -> min node id of its component."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -187,8 +228,7 @@ def test_connected_components_star_matches_union_find(spark, edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    return {n: find(n) for n in parent}
 
 
 @settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
